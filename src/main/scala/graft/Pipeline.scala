@@ -12,10 +12,12 @@ import graft.ops._
   * (`app.py:245-270`) → named result catalog (`app.py:272-278`).
   *
   * Spark-first shape: [[ingestRaw]] resolves schema driver-side (a schema
-  * must exist before a plan does), then everything through the catalog is
-  * ONE lazy plan per output table — Catalyst fuses the whole normalize chain
+  * must exist before a plan does), then every catalog table is a lazy plan
+  * over ONE deduplicated base — Catalyst fuses the whole normalize chain
   * into the scan stage, and the only shuffles are the dedup window and the
-  * two group-by summaries.
+  * two group-by summaries. The multi-table sinks ([[TxTable.commit]] and
+  * the exports below) compute that shared base once for all four tables
+  * ([[Checkpoints.withSharedOnce]]), not once per table.
   */
 object Pipeline {
 
@@ -102,8 +104,10 @@ object Pipeline {
     * formatting is presentation-layer, deliberately out of engine scope).
     */
   def exportCatalog(catalog: Map[String, DataFrame], dir: String, format: String = "parquet"): Unit =
-    catalog.foreach { case (name, df) =>
-      df.write.mode("overwrite").format(format).save(s"$dir/$name")
+    Checkpoints.withSharedOnce(catalog.values.toSeq) {
+      catalog.foreach { case (name, df) =>
+        df.write.mode("overwrite").format(format).save(s"$dir/$name")
+      }
     }
 
   /** S6 at scale — partitioned parquet export: one directory tree per table,
@@ -115,10 +119,12 @@ object Pipeline {
       catalog: Map[String, DataFrame],
       dir: String,
       partitionCols: Map[String, Seq[String]]): Unit =
-    catalog.foreach { case (name, df) =>
-      val w = df.write.mode("overwrite")
-      partitionCols.get(name).filter(_.nonEmpty).fold(w)(cs => w.partitionBy(cs: _*))
-        .parquet(s"$dir/$name")
+    Checkpoints.withSharedOnce(catalog.values.toSeq) {
+      catalog.foreach { case (name, df) =>
+        val w = df.write.mode("overwrite")
+        partitionCols.get(name).filter(_.nonEmpty).fold(w)(cs => w.partitionBy(cs: _*))
+          .parquet(s"$dir/$name")
+      }
     }
 
   /** S1 — full Excel ingest path: workbook file → raw rows → header-detected,
@@ -136,11 +142,13 @@ object Pipeline {
     * (`app.py:72-99`); sheet names truncated like `app.py:55`.
     */
   def exportCatalogXlsx(catalog: Map[String, DataFrame], path: String): Unit = {
-    val sheets = catalog.toSeq.map { case (name, df) =>
-      val header: Seq[Any] = df.columns.toSeq
-      val rows = df.collect().toSeq.map(r =>
-        (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i)))
-      name -> (header +: rows)
+    val sheets = Checkpoints.withSharedOnce(catalog.values.toSeq) {
+      catalog.toSeq.map { case (name, df) =>
+        val header: Seq[Any] = df.columns.toSeq
+        val rows = df.collect().toSeq.map(r =>
+          (0 until r.length).map(i => if (r.isNullAt(i)) null else r.get(i)))
+        name -> (header +: rows)
+      }
     }
     Excel.writeRaw(path, sheets)
   }

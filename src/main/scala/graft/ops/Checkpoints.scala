@@ -57,4 +57,62 @@ object Checkpoints {
     */
   def release(ds: org.apache.spark.sql.Dataset[_]): Unit =
     CheckpointBridge.unpersistCheckpoint(ds)
+
+  /** Run `body`, which evaluates every plan in `dfs` (a multi-table
+    * commit's staging, a catalog export), with each shuffling subplan that
+    * two or more of them share computed once instead of once per plan.
+    *
+    * The shared subplans are the maximal subtrees of the analyzed plans
+    * that contain a shuffle (aggregate, window, join, global sort,
+    * distinct, repartition) and that another plan also contains, matched
+    * by Catalyst's canonicalized `sameResult` (the test exchange reuse and
+    * the cache manager apply). A projection or filter over a scan is not
+    * shared: rescanning it per plan costs less than building and reading a
+    * columnar cache of it. Each shared subplan is `persist`ed at
+    * MEMORY_AND_DISK, which recomputes lost blocks from lineage on executor
+    * loss, unlike a localCheckpoint, and is unpersisted when `body` ends,
+    * however it ends. Smaller subplans are cached first, so a larger shared
+    * subplan that contains one reads it from the cache.
+    *
+    * A subplan the caller has already cached is left alone, and only the
+    * entries this call added are unpersisted. The cache manager offers no
+    * atomic check-and-add, so one race remains: an equal plan that another
+    * thread caches while `body` runs is a no-op for that thread, and the
+    * `finally` drops the shared entry; its readers then recompute (the data
+    * stays correct).
+    */
+  private[graft] def withSharedOnce[T](dfs: Seq[DataFrame])(body: => T): T = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    if (dfs.size < 2) return body
+    val spark = dfs.head.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cm = spark.sharedState.cacheManager
+    def cached(p: LogicalPlan) = !cm.isEmpty && cm.lookupCachedData(spark, p).isDefined
+    def shuffles(p: LogicalPlan) = p.exists {
+      case _: Aggregate | _: Window | _: Join | _: Distinct | _: Deduplicate
+          | _: RepartitionOperation | _: SetOperation => true
+      case s: Sort => s.global
+      case _ => false
+    }
+    val plans = dfs.map(_.queryExecution.analyzed)
+    def sharedWithOther(n: LogicalPlan, i: Int) =
+      plans.zipWithIndex.exists { case (q, j) => j != i && q.exists(_.sameResult(n)) }
+    val found = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    def visit(n: LogicalPlan, i: Int): Unit =
+      if (cached(n) || n.isStreaming || !shuffles(n)) ()
+      else if (sharedWithOther(n, i)) {
+        if (!found.exists(_.sameResult(n))) found += n
+      } else n.children.foreach(visit(_, i))
+    plans.zipWithIndex.foreach { case (p, i) => visit(p, i) }
+    val added = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    try {
+      found.sortBy(_.collect { case n => n }.size).foreach { p =>
+        if (!cached(p)) {
+          cm.cacheQuery(spark, p, None, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          added += p
+        }
+      }
+      body
+    } finally added.reverse.foreach(p =>
+      cm.uncacheQuery(spark, p, cascade = false, blocking = false))
+  }
 }

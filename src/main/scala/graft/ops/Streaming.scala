@@ -544,29 +544,23 @@ object Streaming {
           .groupBy(col(typeCol).as("event_type"),
             date_trunc("day", col(tsCol)).as("day"))
           .agg(count(lit(1)).as("n"))
-        // pinned: the commit stages counts and alerts as two independent
-        // plans that share this subtree — without the pin each batch would
-        // read the previous snapshot and aggregate the micro-batch TWICE
-        val merged = (
+        val merged =
           if (TxTable.exists(spark, root, "counts"))
             TxTable.read(spark, root, "counts").unionByName(delta)
               .groupBy(col("event_type"), col("day")).agg(sum(col("n")).as("n"))
           else delta
-        ).localCheckpoint(true)
-        try {
-          val trail = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("event_type")).orderBy(col("day")).rowsBetween(-7, -1)
-          val alerts = merged
-            .withColumn("mu", avg(col("n")).over(trail))
-            .withColumn("sd", stddev_samp(col("n").cast("double")).over(trail))
-            .filter(col("sd") > 0 && abs((col("n") - col("mu")) / col("sd")) > zThreshold)
-            .select(col("event_type"), col("day"), col("n"),
-              Summaries.r4((col("n") - col("mu")) / col("sd")).as("z"))
-          TxTable.commit(spark, root,
-            Seq(("counts", "replace", merged), ("alerts", "replace", alerts)),
-            guard = guardFor(spark, checkpoint), batchId = batchId)
-          ()
-        } finally Checkpoints.release(merged)
+        val trail = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("event_type")).orderBy(col("day")).rowsBetween(-7, -1)
+        val alerts = merged
+          .withColumn("mu", avg(col("n")).over(trail))
+          .withColumn("sd", stddev_samp(col("n").cast("double")).over(trail))
+          .filter(col("sd") > 0 && abs((col("n") - col("mu")) / col("sd")) > zThreshold)
+          .select(col("event_type"), col("day"), col("n"),
+            Summaries.r4((col("n") - col("mu")) / col("sd")).as("z"))
+        TxTable.commit(spark, root,
+          Seq(("counts", "replace", merged), ("alerts", "replace", alerts)),
+          guard = guardFor(spark, checkpoint), batchId = batchId)
+        ()
       }
       .start()
 

@@ -612,10 +612,13 @@ object TxTable {
   private[graft] def stage(root: String, v: Long, i: Int, table: String,
       df: DataFrame, token: String = ""): Entry = {
     require(!table.contains(" ") && !table.contains("/"), s"bad table name: $table")
-    val rel = if (token.isEmpty) f"$v%020d-$i-$table" else f"$v%020d-$i-$table-$token"
+    val rel = stagedDir(v, i, table, token)
     df.write.mode("overwrite").parquet(new Path(new Path(root, "data"), rel).toString)
     Entry("stage", table, rel) // mode filled in by commit
   }
+
+  private def stagedDir(v: Long, i: Int, table: String, token: String): String =
+    if (token.isEmpty) f"$v%020d-$i-$table" else f"$v%020d-$i-$table-$token"
 
   /** Per-root claim locks: in one JVM, the version-claim check-and-rename is
     * serialized, so in-process concurrent committers can never replace each
@@ -708,33 +711,39 @@ object TxTable {
             // jobs). Entry order is preserved, so same-table double writes
             // keep their last-wins resolution.
             //
+            // Writes derived from one base (the catalog's four tables over
+            // one deduplicated base; a burst sink's counts and alerts over
+            // one merged aggregate) share their common shuffling subplans:
+            // withSharedOnce caches each for the duration of the staging,
+            // so the concurrent jobs share one scan and one shuffle stage
+            // instead of recomputing them per write, and the cache is
+            // dropped on every exit path.
+            //
             // Failure containment: every staging job runs under one commit-
             // scoped job group; when any write fails (or the bounded await
             // expires — a hung staging job must not hang the commit
             // forever), the siblings' in-flight Spark jobs are CANCELLED
-            // (pool.shutdownNow alone does not interrupt a running job) and
-            // every dir staged so far is deleted before the rethrow —
-            // otherwise orphaned staging jobs keep running, contend with
-            // the caller's retry, and their dirs leak until vacuum.
+            // (pool.shutdownNow alone does not interrupt a running job),
+            // given a moment to unwind, and every dir this attempt could
+            // have staged is deleted before the rethrow — otherwise
+            // orphaned staging jobs keep running, contend with the caller's
+            // retry, and their dirs leak until vacuum.
             val pool = java.util.concurrent.Executors.newFixedThreadPool(
               math.min(writes.size, 4))
             val group = s"graft-tx-stage-$token"
-            val stagedSoFar = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
             // generous ceiling (default 24 h), sized for corpus-scale writes
             // — a bound exists so a wedged filesystem fails loudly, not to
             // police slow-but-alive jobs
             val timeoutSec = spark.conf
               .getOption("spark.graft.tx.stagingTimeoutSec").map(_.toLong)
               .getOrElse(86400L)
-            try {
+            try Checkpoints.withSharedOnce(writes.map(_._3)) {
               val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
               val futs = writes.zipWithIndex.map { case ((table, mode, df), i) =>
                 scala.concurrent.Future {
                   spark.sparkContext.setJobGroup(group,
                     s"tx staging $table@$root", interruptOnCancel = false)
-                  val e = stage(root, v, i, table, df, token).copy(mode = mode)
-                  stagedSoFar.add(e)
-                  e
+                  stage(root, v, i, table, df, token).copy(mode = mode)
                 }(ec)
               }
               try futs.map(f => scala.concurrent.Await.result(
@@ -742,9 +751,15 @@ object TxTable {
               catch { case e: Throwable =>
                 spark.sparkContext.cancelJobGroup(group)
                 pool.shutdownNow()
-                stagedSoFar.forEach(se => // best-effort: never mask the cause
-                  try fs.delete(new Path(dataDir(rp), se.dir), true)
-                  catch { case _: Throwable => () })
+                // a cancelled sibling still inside its write would re-create
+                // its dir after the delete below; a wedged one is abandoned.
+                // An interrupt cuts the wait short but not the deletes.
+                try pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
+                catch { case _: InterruptedException => Thread.currentThread.interrupt() }
+                writes.zipWithIndex.foreach { case ((table, _, _), i) =>
+                  try fs.delete(new Path(dataDir(rp), stagedDir(v, i, table, token)), true)
+                  catch { case _: Throwable => () } // best-effort: never mask the cause
+                }
                 throw e
               }
             } finally pool.shutdown()

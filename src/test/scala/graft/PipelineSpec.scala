@@ -90,4 +90,14 @@ class PipelineSpec extends AnyFunSuite {
     val base = spark.read.parquet(s"$dir/base_limpa")
     assert(base.count() == 3)
   }
+
+  test("committed catalog is consistent: failures ⊆ base_limpa, status counts sum to it") {
+    import org.apache.spark.sql.functions.sum
+    val root = s"target/tmp/pipeline_tx_${System.nanoTime()}"
+    ops.TxTable.commit(spark, root, catalog.toSeq.map { case (n, df) => (n, "replace", df) })
+    def read(t: String) = ops.TxTable.read(spark, root, t)
+    val base = read("base_limpa")
+    assert(read("falhas_upgrade").exceptAll(base).isEmpty)
+    assert(read("resumo_status").agg(sum($"qtd")).as[Long].head() == base.count())
+  }
 }

@@ -588,4 +588,128 @@ class TxTableSpec extends AnyFunSuite {
       "the pre-evolution row must stay NULL-filled after the fold")
     assert(snap.count() == 71L)
   }
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  /** (cache manager empty, persisted RDD ids): what a commit must leave as
+    * it found it. Compared before/after rather than asserted empty, because
+    * the suites share one session and an earlier suite may have pinned
+    * something.
+    */
+  private def cacheState() =
+    (cacheManager.isEmpty, spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  private def uncached(df: org.apache.spark.sql.DataFrame) =
+    df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("multi-table commit computes the shared window once and leaves no cache behind") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val root = base()
+    val src  = s"$root-src"
+    spark.range(0, 3000)
+      .select(col("id"), (col("id") % 7).as("k"), (col("id") * 13 % 101).as("v"))
+      .write.parquet(src)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("k")).orderBy(col("v").desc, col("id"))
+    val shared = spark.read.parquet(src).withColumn("rn", row_number().over(w))
+    val writes = Seq(
+      "base" -> shared,
+      "agg"  -> shared.groupBy(col("k")).agg(count(lit(1)).as("n"), sum(col("v")).as("s")),
+      "top"  -> shared.filter(col("rn") <= 3))
+    val before = cacheState()
+    // a stage that scans the source file and writes shuffle is the window's
+    // map side; the aggregate's own exchange reads the window output instead
+    val sourceShuffles = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        if (si.taskMetrics.shuffleWriteMetrics.bytesWritten > 0 &&
+            si.rddInfos.exists(_.name == "FileScanRDD")) sourceShuffles.incrementAndGet()
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftbridge.ListenerBridge.flush(sc)
+    sc.addSparkListener(l)
+    try {
+      assert(TxTable.commit(spark, root, writes.map { case (t, df) => (t, "replace", df) }))
+      org.apache.spark.sql.graftbridge.ListenerBridge.flush(sc)
+    } finally sc.removeSparkListener(l)
+    assert(sourceShuffles.get == 1, "the shared scan + window exchange must run once")
+    assert(cacheState() == before && uncached(shared), "the commit must drop its cache")
+    // the read-back equals each plan evaluated on its own, with no cache
+    writes.foreach { case (t, df) =>
+      assert(sortedRows(TxTable.read(spark, root, t)) == sortedRows(df), t)
+    }
+  }
+
+  test("only shared subplans with a shuffle are cached for the commit") {
+    import org.apache.spark.sql.functions._
+    val src = s"${base()}-src"
+    spark.range(0, 200).select(col("id"), (col("id") % 4).as("k")).write.parquet(src)
+    val projected = spark.read.parquet(src).withColumn("d", col("id") * 2)
+    val grouped   = projected.groupBy(col("k")).agg(sum(col("d")).as("s"))
+    val before = cacheState()
+    def cachedInside(shared: org.apache.spark.sql.DataFrame) =
+      ops.Checkpoints.withSharedOnce(Seq(shared.filter(col("k") === 1),
+        shared.filter(col("k") =!= 1))) { !uncached(shared) }
+    assert(!cachedInside(projected), "a projection over a scan is cheaper to rescan")
+    assert(cachedInside(grouped), "a shared aggregate is computed once")
+    assert(cacheState() == before && uncached(grouped))
+  }
+
+  test("multi-table commit never unpersists a Dataset the caller cached") {
+    import org.apache.spark.sql.functions._
+    val root   = base()
+    val pinned = spark.range(0, 500).select(col("id"), (col("id") % 5).as("k"))
+      .distinct().persist()
+    try {
+      assert(pinned.count() == 500L)
+      val before = cacheState()
+      // `pinned` itself is shared by all three writes (left to the caller's
+      // cache); `ranked` is shared by two (cached for the commit only)
+      val ranked = pinned.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("k")).orderBy(col("id"))))
+      TxTable.commit(spark, root, Seq(
+        ("a", "replace", ranked.filter(col("k") === 1)),
+        ("b", "replace", ranked.filter(col("k") =!= 1)),
+        ("c", "replace", pinned.groupBy(col("k")).count())))
+      assert(pinned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      assert(cacheState() == before && uncached(ranked))
+      assert(TxTable.read(spark, root, "a").count() + TxTable.read(spark, root, "b").count() == 500L)
+      assert(TxTable.read(spark, root, "c").count() == 5L)
+    } finally pinned.unpersist()
+  }
+
+  test("a failing write aborts a multi-table commit: no version, no staged dir, no cache") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val root = base()
+    TxTable.replace(spark, root, Seq(1L).toDF("v"), table = "base")
+    val versions = TxTable.versions(spark, root)
+    val dirs     = new java.io.File(s"$root/data").list().toSet
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("id") % 5).orderBy(col("id"))
+    val shared = spark.range(0, 1000).withColumn("rn", row_number().over(w))
+    val failing = shared.select(
+      when(col("id") === 999L, raise_error(lit("staging boom"))).otherwise(col("id")).as("v"))
+    val before = cacheState()
+    val e = intercept[Exception] {
+      TxTable.commit(spark, root, Seq(
+        ("base", "replace", shared),
+        ("firsts", "replace", shared.filter(col("rn") === 1)),
+        ("bad", "replace", failing)))
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("staging boom")), e)
+    assert(TxTable.versions(spark, root) == versions, "a failed commit must add no version")
+    assert(new java.io.File(s"$root/data").list().toSet == dirs, "staged dirs must be deleted")
+    assert(cacheState() == before && uncached(shared), "the failure path must drop the cache")
+    assert(readSum(root, "base") == 1L)
+  }
 }

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Round-19 serialized close-out pipeline (the bench_r17.sh shape). One JVM
+# Round-19 serialized close-out pipeline. One JVM
 # at a time — the two-run host-interference protocol bans concurrent heavy
 # work. Status lines to target/bench_r19_status.txt; ALL_DONE marker at end.
 #
